@@ -225,3 +225,8 @@ def test_compact_chunks_decode_identical_and_fewer_rows(spark, filled):
     again = compact_chunks(big, chunk_points=4096)
     assert big.exceptAll(again).count() == 0
     assert again.exceptAll(big).count() == 0
+    # and frames the same points as encoding at the target directly, so
+    # the rows are byte-equal to a fresh 4096-point encode
+    direct = encode_chunks(filled, "1m", chunk_points=4096)
+    assert big.exceptAll(direct).count() == 0
+    assert direct.exceptAll(big).count() == 0

@@ -26,14 +26,6 @@ def test_scalar_float_roundtrip(xs):
 
 
 @settings(max_examples=60, deadline=None)
-@given(floats)
-def test_block_float_roundtrip(xs):
-    a = np.array(xs, dtype=np.float64)
-    out = gv.decode_floats_block(gv.encode_floats_block(a))
-    np.testing.assert_array_equal(out.view(np.uint64), a.view(np.uint64))
-
-
-@settings(max_examples=60, deadline=None)
 @given(timestamps)
 def test_scalar_ts_roundtrip(xs):
     a = np.array(xs, dtype=np.int64)

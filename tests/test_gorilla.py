@@ -70,25 +70,10 @@ def test_compression_ratio_on_rollup_like_data():
 # --- vectorized block codecs (kernel/gorilla_vec.py) -------------------------
 
 from yatsm_spark.kernel.gorilla_vec import (
-    decode_floats_block,
     decode_timestamps_block,
-    encode_floats_block,
+    encode_ints_block,
     encode_timestamps_block,
 )
-
-
-def test_block_float_roundtrip_cases():
-    rng = np.random.RandomState(7)
-    v = rng.normal(100, 5, 1000)
-    v[::7] = np.nan
-    v[::13] = 0.0
-    v[1::97] = np.inf
-    for case in (v, np.full(5000, 42.5), np.array([]), np.array([1.5]),
-                 np.array([np.nan, np.nan]), np.array([-0.0, 0.0]),
-                 rng.poisson(3, 5000).astype(np.float64)):
-        a = np.asarray(case, dtype=np.float64)
-        out = decode_floats_block(encode_floats_block(a))
-        np.testing.assert_array_equal(out.view(np.uint64), a.view(np.uint64))
 
 
 def test_block_ts_roundtrip_cases():
@@ -106,24 +91,7 @@ def test_block_ts_roundtrip_cases():
 
 def test_block_codec_compresses_rollup_series():
     rng = np.random.RandomState(1)
-    counts = rng.poisson(3, 5000).astype(np.float64)
+    counts = rng.poisson(3, 5000)
     ts = np.arange(5000, dtype=np.int64) * 60
     assert len(encode_timestamps_block(ts)) < 8 * 5000 / 20
-    assert len(encode_floats_block(counts)) < 8 * 5000 / 3
-
-
-def test_operator_decode_dispatches_both_formats():
-    from yatsm_spark.operators import codec as C
-
-    v = np.array([1.0, 2.0, 2.0, np.nan])
-    ts = np.array([0, 60, 120, 240], dtype=np.int64)
-    # block format (operator default)
-    np.testing.assert_array_equal(
-        C.decode_floats(C.encode_floats(v)).view(np.uint64), v.view(np.uint64))
-    np.testing.assert_array_equal(C.decode_timestamps(C.encode_timestamps(ts)), ts)
-    # scalar per-point Gorilla format still decodes through the same entry
-    from yatsm_spark.kernel import gorilla as g
-
-    np.testing.assert_array_equal(
-        C.decode_floats(g.encode_floats(v)).view(np.uint64), v.view(np.uint64))
-    np.testing.assert_array_equal(C.decode_timestamps(g.encode_timestamps(ts)), ts)
+    assert len(encode_ints_block(counts)) < 8 * 5000 / 3

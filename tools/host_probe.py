@@ -14,7 +14,13 @@ Usage: python tools/host_probe.py [n_threads]   (default 16)
 Prints one JSON line:
   {"st_cache_gbs": .., "st_dram_gbs": .., "par_threads": N,
    "par_agg_gbs": .., "par_per_thread_gbs": ..}
-Healthy anchors on this host: st_cache 10-15+, st_dram 5.5+,
+Each pass computes x * 1.5 + 2.0 into a preallocated buffer in two ufunc
+sweeps (multiply into buf, add in place), so the figures count the bytes
+those sweeps really move: read x + write buf + read buf + write buf, 32 B
+per element. Parallel threads allocate first and start their timed
+windows together at a barrier, so par_agg_gbs is a concurrent aggregate.
+Healthy anchors from the 32-core round-6 host, measured before both fixes
+with a formula counting 16 B per element: st_cache 10-15+, st_dram 5.5+,
 par_agg well above ~25 (degraded windows measured ~11).
 """
 
@@ -23,29 +29,43 @@ from __future__ import annotations
 import json
 import statistics
 import sys
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 
 
+_BYTES_PER_ELEM = 8 * 4  # read x, write buf, read buf, write buf
+
+
+def _pass(x: np.ndarray, buf: np.ndarray) -> None:
+    np.multiply(x, 1.5, out=buf)
+    buf += 2.0
+
+
 def _bw(n: int) -> float:
     x = np.random.rand(n)
+    buf = np.empty_like(x)
     outs = []
     for _ in range(3):
         t0 = time.time()
-        _ = x * 1.5 + 2.0
-        outs.append(n * 8 * 2 / (time.time() - t0) / 1e9)
+        _pass(x, buf)
+        outs.append(n * _BYTES_PER_ELEM / (time.time() - t0) / 1e9)
     return round(statistics.median(outs), 2)
 
 
 def _par(n_threads: int) -> tuple[float, float]:
+    start = threading.Barrier(n_threads)
+
     def work(_):
         x = np.random.rand(8_000_000)
+        buf = np.empty_like(x)
+        start.wait()
         t0 = time.time()
         for _ in range(3):
-            _y = x * 1.5 + 2.0
-        return 8_000_000 * 8 * 2 * 3 / (time.time() - t0) / 1e9
+            _pass(x, buf)
+        return 8_000_000 * _BYTES_PER_ELEM * 3 / (time.time() - t0) / 1e9
 
     with ThreadPoolExecutor(n_threads) as ex:
         outs = sorted(ex.map(work, range(n_threads)))

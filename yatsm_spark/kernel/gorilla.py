@@ -9,10 +9,10 @@
   '11' + 5b leading + 6b length + bits = new window.
 
 The reference has no compression (raw .npz, SURVEY.md §4 "Compression of
-outputs" row); this is a graft addition required by BASELINE.json::north_star.
-NaN round-trips exactly (bit pattern preserved), which the chunk writer uses
-for gap slots. Exactness contract: decode(encode(x)) == x bit-for-bit
-(FIXTURES.md §2.3).
+outputs" row). This per-point codec is the test-only reference of the
+paper's bit layout; the engine's chunks use the block codec in
+kernel/gorilla_vec.py. NaN round-trips exactly (bit pattern preserved).
+Exactness contract: decode(encode(x)) == x bit-for-bit.
 """
 
 from __future__ import annotations
@@ -78,10 +78,6 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
     """Encode int64 timestamps (seconds or any monotone int64) to bytes."""
     ts = np.asarray(ts, dtype=np.int64)
     n = len(ts)
-    # First byte of the stream is the count's high byte: keep it below the
-    # block-codec version range (0xF2..0xF4, kernel/gorilla_vec.py) so
-    # dispatch-on-first-byte in operators/codec.py is unambiguous.
-    assert n < 0xF0000000, "scalar stream too long for first-byte dispatch"
     w = BitWriter()
     w.write(n, 32)
     if n == 0:
@@ -155,8 +151,6 @@ def encode_floats(vals: np.ndarray) -> bytes:
     """Gorilla XOR encoding of float64 values. NaN-safe (bit patterns)."""
     bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
     n = len(bits)
-    # See encode_timestamps: first byte must stay out of 0xF2..0xF4.
-    assert n < 0xF0000000, "scalar stream too long for first-byte dispatch"
     w = BitWriter()
     w.write(n, 32)
     if n == 0:

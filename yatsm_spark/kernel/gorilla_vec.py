@@ -1,21 +1,11 @@
-"""Vectorized (numpy) XOR-float + delta-of-delta codecs.
+"""Vectorized (numpy) delta-of-delta block codecs — the chunk format.
 
 The scalar codec in kernel/gorilla.py implements the exact per-point
-Gorilla bit layout (paper §4.1) — its '10'-reuse window is a sequential
-state machine, inherently loop-bound in pure Python. For the 10^12-point
-hot path the engine uses this BLOCK variant of the same two ideas
-(XOR-with-leading/trailing-window, delta-of-delta bucketing), restructured
-so encode AND decode are single-pass numpy:
-
-float block layout (version byte 0xF2):
-    [ver:8][n:32][first:64][lead:8][mbits:8]
-    [flags: n-1 bits]            1 = xor != 0
-    [payloads: nnz * mbits bits] meaningful bits of each nonzero xor
-
-(lead, mbits) are chosen per block from the OR of all xors — every nonzero
-xor fits one shared window, trading a few bits/point vs per-point windows
-for fully-columnar encode/decode (the standard block-codec variant, cf.
-the VLDB'20 compressed-TS line in PAPERS.md).
+Gorilla bit layout (paper §4.1) — a sequential state machine, inherently
+loop-bound in pure Python — and is kept only as a test reference. The
+engine writes this BLOCK variant of its delta-of-delta idea, restructured
+so encode AND decode are single-pass numpy (the standard block-codec
+variant, cf. the VLDB'20 compressed-TS line in PAPERS.md):
 
 timestamp block layout (version byte 0xF3):
     [ver:8][n:32][first:64][first_delta:64]
@@ -25,80 +15,41 @@ timestamp block layout (version byte 0xF3):
 nullable-int64 block layout (version byte 0xF4):
     [ver:8][n:32][null flags: n bits, byte-padded]
     [ts-block stream of the non-null values]
-Integer rollup measures (counts, sums, min/max of int64 token lengths)
-take this path so they round-trip EXACTLY over the full int64 range —
-the float path is exact only below 2^53 (round-1 ADVICE).
+Every rollup measure (counts, sums, min/max of int64 token lengths) takes
+this path, so it round-trips EXACTLY over the full int64 range — a float
+XOR path would be exact only below 2^53 (round-1 ADVICE).
 
-Version bytes live in 0xF2..0xF4: the scalar per-point Gorilla stream
-(kernel/gorilla.py) starts with the high byte of its 32-bit point count,
-which encode asserts < 0xF0000000 points, so the first byte of a scalar
-stream can never collide with a block version byte and dispatch-on-first-
-byte (operators/codec.py) is sound (round-1 ADVICE).
-
-Bit-exact round-trip (incl. NaN) is enforced by tests/test_gorilla.py +
-tests/test_codec_property.py for all codec families.
+Decoders check the version byte and raise ValueError on any other stream
+(chunk bytes come from disk). Bit-exact round-trip is enforced by
+tests/test_gorilla.py + tests/test_codec_property.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-FLOAT_BLOCK_VER = 0xF2
 TS_BLOCK_VER = 0xF3
 INT_BLOCK_VER = 0xF4
-#: Pre-round-2 block streams used version byte 0x02 for BOTH float and ts
-#: blocks (disambiguated by which decoder is called — the layouts are
-#: otherwise identical). Kept as an accepted legacy byte so chunk tables
-#: persisted by old code still decode on resume (round-2 ADVICE).
-LEGACY_BLOCK_VER = 0x02
 
 _TS_WIDTHS = np.array([0, 7, 12, 64], dtype=np.int64)
 
 
-def _scatter_bits(values: np.ndarray, widths: np.ndarray, head: np.ndarray) -> bytes:
+def _check_version(data: bytes, ver: int, kind: str) -> None:
+    if not data or data[0] != ver:
+        found = f"0x{data[0]:02x}" if data else "an empty stream"
+        raise ValueError(f"not a {kind} block: found {found}, expected 0x{ver:02x}")
+
+
+def _pack_words(values: np.ndarray, widths: np.ndarray, head: np.ndarray) -> bytes:
     """Pack `head` (a 0/1 uint8 bit array) followed by variable-width
-    big-endian fields (values[i] in widths[i] bits) into bytes — no Python
-    loop: repeat/cumsum index tricks + np.packbits."""
-    widths = np.asarray(widths, dtype=np.int64)
-    if len(widths) == 0:
-        return np.packbits(head.astype(np.uint8)).tobytes()
-    total = int(widths.sum())
-    starts = np.concatenate([[0], np.cumsum(widths)[:-1]]).astype(np.int64)
-    k = np.arange(total, dtype=np.int64) - np.repeat(starts, widths)
-    v = np.repeat(values.astype(np.uint64), widths)
-    w = np.repeat(widths, widths)
-    bits = ((v >> (w - 1 - k).astype(np.uint64)) & np.uint64(1)).astype(np.uint8)
-    allbits = np.concatenate([head.astype(np.uint8), bits])
-    return np.packbits(allbits).tobytes()
-
-
-def _gather_bits(bits: np.ndarray, offsets: np.ndarray, widths: np.ndarray) -> np.ndarray:
-    """Read variable-width big-endian uints from a 0/1 bit array. All
-    widths must be > 0 (callers filter zero-width classes first)."""
-    widths = np.asarray(widths, dtype=np.int64)
-    if len(widths) == 0:
-        return np.array([], dtype=np.uint64)
-    starts = np.concatenate([[0], np.cumsum(widths)[:-1]]).astype(np.int64)
-    total = int(widths.sum())
-    k = np.arange(total, dtype=np.int64) - np.repeat(starts, widths)
-    pos = np.repeat(np.asarray(offsets, dtype=np.int64), widths) + k
-    w = np.repeat(widths, widths)
-    weighted = bits[pos].astype(np.uint64) << (w - 1 - k).astype(np.uint64)
-    return np.add.reduceat(weighted, starts).astype(np.uint64)
-
-
-def _pack_words(values: np.ndarray, widths, head: np.ndarray) -> bytes:
-    """Byte-identical drop-in for _scatter_bits built on 64-bit words:
-    each field touches at most TWO words (one np.where + one
+    big-endian fields (values[i] in widths[i] bits) into bytes, built on
+    64-bit words: each field touches at most TWO words (one np.where + one
     bitwise_or.reduceat per side), so temporaries are O(1) per VALUE
-    instead of O(1) per BIT — ~width× less memory traffic, which is the
-    whole cost of the float path (shared-window mbits is typically
-    20–52). Fields are placed MSB-first at offsets
-    head_bits + cumsum(widths), exactly np.packbits' bit order, so the
-    emitted stream is bit-for-bit what _scatter_bits produces."""
+    instead of O(1) per BIT. Fields are placed MSB-first at offsets
+    head_bits + cumsum(widths), exactly np.packbits' bit order."""
     head = np.asarray(head, dtype=np.uint8)
     values = np.asarray(values, dtype=np.uint64)
-    widths = np.broadcast_to(np.asarray(widths, dtype=np.int64), values.shape)
+    widths = np.asarray(widths, dtype=np.int64)
     hbits = len(head)
     if len(values) == 0:
         return np.packbits(head).tobytes()
@@ -129,13 +80,13 @@ def _pack_words(values: np.ndarray, widths, head: np.ndarray) -> bytes:
     return words.astype(">u8").tobytes()[: (total + 7) // 8]
 
 
-def _gather_words(buf: np.ndarray, offsets: np.ndarray, widths) -> np.ndarray:
-    """Word-based counterpart of _gather_bits reading straight from the
+def _gather_words(buf: np.ndarray, offsets: np.ndarray, widths: np.ndarray) -> np.ndarray:
+    """Read variable-width big-endian uints straight from the
     BYTE buffer (uint8 array) — no unpackbits of the payload region, no
     per-bit temporaries. offsets are absolute bit positions (MSB-first
-    np.packbits order); widths scalar or per-field, all in 1..64."""
+    np.packbits order); one width per field, each in 1..64."""
     offsets = np.asarray(offsets, dtype=np.int64)
-    widths = np.broadcast_to(np.asarray(widths, dtype=np.int64), offsets.shape)
+    widths = np.asarray(widths, dtype=np.int64)
     if len(offsets) == 0:
         return np.array([], dtype=np.uint64)
     padded = np.zeros(((len(buf) + 7) // 8) * 8, dtype=np.uint8)
@@ -156,68 +107,13 @@ def _gather_words(buf: np.ndarray, offsets: np.ndarray, widths) -> np.ndarray:
     return (vals & mask).astype(np.uint64)
 
 
-# --- floats -----------------------------------------------------------------
-
-
-def encode_floats_block(vals: np.ndarray) -> bytes:
-    bits = np.ascontiguousarray(np.asarray(vals, dtype=np.float64)).view(np.uint64)
-    n = len(bits)
-    header = bytearray()
-    header.append(FLOAT_BLOCK_VER)
-    header += int(n).to_bytes(4, "big")
-    if n == 0:
-        return bytes(header)
-    header += int(bits[0]).to_bytes(8, "big")
-    if n == 1:
-        return bytes(header)
-    x = bits[1:] ^ bits[:-1]
-    union = np.bitwise_or.reduce(x)
-    if union == 0:
-        lead, mbits = 0, 1  # degenerate: all equal; flags all 0, no payloads
-    else:
-        u = int(union)
-        lead = 64 - u.bit_length()
-        tz = (u & -u).bit_length() - 1
-        mbits = 64 - lead - tz
-    tail = 64 - lead - mbits
-    header.append(lead)
-    header.append(mbits)
-    flags = (x != 0).astype(np.uint8)
-    nz = x[x != 0] >> np.uint64(tail)
-    return bytes(header) + _pack_words(nz, mbits, flags)
-
-
-def decode_floats_block(data: bytes) -> np.ndarray:
-    assert data[0] in (FLOAT_BLOCK_VER, LEGACY_BLOCK_VER)
-    n = int.from_bytes(data[1:5], "big")
-    out = np.empty(n, dtype=np.uint64)
-    if n == 0:
-        return out.view(np.float64)
-    out[0] = int.from_bytes(data[5:13], "big")
-    if n == 1:
-        return out.view(np.float64)
-    lead = data[13]
-    mbits = data[14]
-    tail = 64 - lead - mbits
-    buf = np.frombuffer(data[15:], dtype=np.uint8)
-    flags = np.unpackbits(buf[: (n - 1 + 7) // 8])[: n - 1].astype(bool)
-    nnz = int(flags.sum())
-    offsets = (n - 1) + np.arange(nnz, dtype=np.int64) * mbits
-    payl = _gather_words(buf, offsets, mbits) << np.uint64(tail)
-    x = np.zeros(n - 1, dtype=np.uint64)
-    x[flags] = payl
-    np.bitwise_xor.accumulate(np.concatenate([out[:1], x]), out=out)
-    return out.view(np.float64)
-
-
 # --- nullable int64 -----------------------------------------------------------
 
 
 def encode_ints_block(vals: np.ndarray, null_mask: np.ndarray | None = None) -> bytes:
     """Exact int64 block codec: null-flag bitmap + delta-of-delta stream of
     the non-null values (reuses the timestamp machinery — dod wraps modulo
-    2^64, so ANY int64 series round-trips bit-exactly, unlike the float
-    path which loses integers above 2^53)."""
+    2^64, so ANY int64 series round-trips bit-exactly)."""
     vals = np.asarray(vals, dtype=np.int64)
     n = len(vals)
     if null_mask is None:
@@ -229,7 +125,7 @@ def encode_ints_block(vals: np.ndarray, null_mask: np.ndarray | None = None) -> 
 
 def decode_ints_block(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     """-> (values int64 with 0 at null slots, null_mask bool)."""
-    assert data[0] == INT_BLOCK_VER
+    _check_version(data, INT_BLOCK_VER, "nullable-int64")
     n = int.from_bytes(data[1:5], "big")
     nflag_bytes = (n + 7) // 8
     null_mask = np.unpackbits(
@@ -278,7 +174,7 @@ def encode_timestamps_block(ts: np.ndarray) -> bytes:
 
 
 def decode_timestamps_block(data: bytes) -> np.ndarray:
-    assert data[0] in (TS_BLOCK_VER, LEGACY_BLOCK_VER)
+    _check_version(data, TS_BLOCK_VER, "timestamp")
     n = int.from_bytes(data[1:5], "big")
     out = np.empty(n, dtype=np.int64)
     if n == 0:

@@ -1,18 +1,17 @@
-"""Compressed chunk encode/decode — Arrow UDF wrappers over kernel.gorilla.
+"""Compressed chunk encode/decode — Arrow UDF wrappers over kernel.gorilla_vec.
 
 The reference stores raw .npz (no compression — SURVEY.md §4); the graft
-requires Gorilla XOR values + delta-of-delta timestamps (BASELINE.json
-north_star, VLDB'20 compressed-TS lineage in PAPERS.md). Chunk row schema
-per FIXTURES.md §2.3:
+stores finalized points as Gorilla-style delta-of-delta block streams
+(BASELINE.json north_star, VLDB'20 compressed-TS lineage in PAPERS.md).
+Chunk row schema per FIXTURES.md §2.3:
 
     (conv_id, tier, chunk_start, n_points, ts_codec binary, val_codec binary)
 
-val_codec layout: for each measure in rollup.MEASURES order, a 4-byte
-big-endian length followed by that measure's self-describing stream:
-integer/boolean series use the nullable-int64 block codec (exact over the
-FULL int64 range — the float path is exact only below 2^53, round-1
-ADVICE), float series use the Gorilla XOR stream (nulls as NaN).
-gap_filled is packed as a 0/1 int series appended last.
+ts_codec is one timestamp block (0xF3). val_codec holds, for each measure
+in rollup.MEASURES order and then gap_filled as a 0/1 series, a 4-byte
+big-endian length followed by that series' nullable-int64 block (0xF4),
+exact over the FULL int64 range (round-1 ADVICE). That is the one format
+written and read; a stream in any other format raises ValueError.
 
 Bounded chunks (default 4096 points ≈ 2.8 days of 1m) keep a mega-conv from
 producing one giant row; groups stream through applyInPandas per conv.
@@ -27,54 +26,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from yatsm_spark.kernel import gorilla as g_scalar
 from yatsm_spark.kernel import gorilla_vec as g_vec
 from yatsm_spark.operators.rollup import MEASURES
-
-# Default: the vectorized block codecs (kernel/gorilla_vec.py) — the
-# "vectorized Arrow UDF" hot path. Streams are self-describing: block
-# streams start with a version byte in 0xF2..0xF4; the scalar per-point
-# Gorilla format starts with the high byte of a 32-bit count, which its
-# encoder asserts < 0xF0, so first-byte dispatch cannot misfire.
-
-
-def encode_floats(v):
-    return g_vec.encode_floats_block(v)
-
-
-def encode_timestamps(ts):
-    return g_vec.encode_timestamps_block(ts)
-
-
-def encode_ints(v, null_mask=None):
-    return g_vec.encode_ints_block(v, null_mask)
-
-
-def decode_floats(data: bytes):
-    if data and data[0] in (g_vec.FLOAT_BLOCK_VER, g_vec.LEGACY_BLOCK_VER):
-        return g_vec.decode_floats_block(data)
-    return g_scalar.decode_floats(data)
-
-
-def decode_timestamps(data: bytes):
-    if data and data[0] in (g_vec.TS_BLOCK_VER, g_vec.LEGACY_BLOCK_VER):
-        return g_vec.decode_timestamps_block(data)
-    return g_scalar.decode_timestamps(data)
-
-
-def decode_series(data: bytes):
-    """-> (values ndarray, null_mask ndarray) for any value stream."""
-    if data and data[0] == g_vec.INT_BLOCK_VER:
-        return g_vec.decode_ints_block(data)
-    v = decode_floats(data)
-    return v, np.isnan(v)
 
 _SERIES = MEASURES + ["gap_filled"]
 
 #: Bumped whenever the persisted chunk byte layout changes; folded into the
 #: pipeline's per-bucket checkpoint fingerprint so a resumed workdir written
 #: by a different format re-encodes instead of mixing stream versions
-#: (round-2 ADVICE — legacy 0x02 streams also still decode, see gorilla_vec).
+#: (round-2 ADVICE).
 CHUNK_FORMAT_VERSION = 3
 
 CHUNK_SCHEMA = T.StructType([
@@ -94,16 +54,54 @@ ROLLUP_SCHEMA = T.StructType(
 )
 
 
-def _decode_values(buf: bytes, n: int) -> dict[str, tuple[np.ndarray, np.ndarray]]:
-    out = {}
-    pos = 0
-    for m in _SERIES:
-        (ln,) = struct.unpack_from(">I", buf, pos)
-        pos += 4
-        out[m] = decode_series(buf[pos : pos + ln])
-        pos += ln
-        assert len(out[m][0]) == n
-    return out
+def _frame_chunks(conv_id: str, tier: str, epochs: np.ndarray,
+                  series: dict, chunk_points: int) -> pd.DataFrame:
+    """One conv's time-ordered points -> chunk rows of <= chunk_points.
+    ``series`` maps every _SERIES name to (int64 values, null mask or
+    None); values at null slots are not stored."""
+    starts = np.arange(0, len(epochs), chunk_points)
+    ts_codec, val_codec = [], []
+    for lo in starts:
+        hi = lo + chunk_points
+        ts_codec.append(g_vec.encode_timestamps_block(epochs[lo:hi]))
+        parts = []
+        for m in _SERIES:
+            v, nm = series[m]
+            stream = g_vec.encode_ints_block(v[lo:hi], None if nm is None else nm[lo:hi])
+            parts += (struct.pack(">I", len(stream)), stream)
+        val_codec.append(b"".join(parts))
+    return pd.DataFrame({
+        "conv_id": conv_id,
+        "tier": tier,
+        "chunk_start": pd.to_datetime(epochs[starts], unit="s"),
+        "n_points": np.minimum(len(epochs) - starts, chunk_points),
+        "ts_codec": ts_codec,
+        "val_codec": val_codec,
+    })
+
+
+def _decode_chunk_columns(n_points, ts_codec, val_codec) -> tuple[np.ndarray, dict]:
+    """Chunk columns -> (epochs, {series: (int64 values, null mask)}), each
+    concatenated over the chunks in row order. Raises ValueError when a
+    stream is not the format above or disagrees with its n_points."""
+    epochs = []
+    cols: dict[str, tuple[list, list]] = {m: ([], []) for m in _SERIES}
+    for n, ts_buf, buf in zip(n_points, ts_codec, val_codec):
+        ts = g_vec.decode_timestamps_block(ts_buf)
+        if len(ts) != n:
+            raise ValueError(f"ts_codec holds {len(ts)} points, n_points is {n}")
+        epochs.append(ts)
+        pos = 0
+        for m in _SERIES:
+            (ln,) = struct.unpack_from(">I", buf, pos)
+            v, nm = g_vec.decode_ints_block(buf[pos + 4 : pos + 4 + ln])
+            pos += 4 + ln
+            if len(v) != n:
+                raise ValueError(f"val_codec {m} holds {len(v)} points, n_points is {n}")
+            cols[m][0].append(v)
+            cols[m][1].append(nm)
+    return np.concatenate(epochs), {
+        m: (np.concatenate(v), np.concatenate(nm)) for m, (v, nm) in cols.items()}
 
 
 def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
@@ -141,69 +139,31 @@ def encode_chunks(rollup: DataFrame, tier: str, chunk_points: int = 4096,
     # kernel is compute-heavy and group skew is the binding constraint
     # (changescore.py).
     rollup = rollup.select(*sel)
+    int_cols = count_cols + [c for m in stat_cols for c in (m, f"_nn_{m}")]
 
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:
         """Whole-conv numpy encode: every series is converted to
         (int64 values, null mask) ONCE per conv — int64-exact end to end,
         no float round-trip — then the chunk loop slices numpy arrays.
         (Per-chunk pandas ops were ~2x the actual codec cost.)"""
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
         epochs = pdf["window_start"].to_numpy().astype("datetime64[s]").astype(np.int64)
         order = np.argsort(epochs, kind="stable")
         epochs = epochs[order]
-        vals: dict[str, np.ndarray] = {}
-        nulls: dict[str, np.ndarray | None] = {}
-        for c in count_cols:
-            vals[c] = pdf[c].to_numpy(dtype=np.int64)[order]
-            nulls[c] = None
-        for c in stat_cols:
-            vals[c] = pdf[c].to_numpy(dtype=np.int64)[order]
-            nulls[c] = (~pdf[f"_nn_{c}"].to_numpy(dtype=bool))[order]
-        gap = pdf["gap_filled"].to_numpy(dtype=np.int64)[order]
+        col = {c: pdf[c].to_numpy(dtype=np.int64)[order] for c in int_cols}
         if densify:
             from yatsm_spark.kernel.gapfill import gapfill_slots
 
-            grid_in = {c: vals[c] for c in count_cols}
-            # stats travel as int64 + a notnull flag column: gap slots get
+            # stats travel as int64 + the notnull flag column: gap slots get
             # notnull=0 (int fill is 0), i.e. null — no float64 detour, so
             # values above 2^53 stay exact through densification too.
-            for c in stat_cols:
-                grid_in[c] = vals[c]
-                grid_in[f"_nn_{c}"] = (~nulls[c]).astype(np.int64)
-            dense = gapfill_slots(epochs, grid_in, step=step)
-            epochs = dense["slot_epoch"]
-            gap = dense["gap_filled"].astype(np.int64)
-            for c in count_cols:
-                vals[c] = dense[c]
-                nulls[c] = None
-            for c in stat_cols:
-                vals[c] = dense[c]
-                nulls[c] = dense[f"_nn_{c}"] == 0
-        conv_id = pdf["conv_id"].iloc[0]
-        rows = []
-        for lo in range(0, len(epochs), chunk_points):
-            hi = min(lo + chunk_points, len(epochs))
-            parts = []
-            for m in _SERIES:
-                if m == "gap_filled":
-                    stream = encode_ints(gap[lo:hi], None)
-                else:
-                    nm = nulls[m]
-                    stream = encode_ints(vals[m][lo:hi],
-                                         None if nm is None else nm[lo:hi])
-                parts.append(struct.pack(">I", len(stream)))
-                parts.append(stream)
-            rows.append({
-                "conv_id": conv_id,
-                "tier": tier,
-                "chunk_start": pd.Timestamp(int(epochs[lo]), unit="s"),
-                "n_points": hi - lo,
-                "ts_codec": encode_timestamps(epochs[lo:hi]),
-                "val_codec": b"".join(parts),
-            })
-        return pd.DataFrame(rows)
+            col = gapfill_slots(epochs, col, step=step)
+            epochs = col["slot_epoch"]
+        else:
+            col["gap_filled"] = pdf["gap_filled"].to_numpy(dtype=np.int64)[order]
+        series = {c: (col[c], None) for c in count_cols + ["gap_filled"]}
+        series.update({c: (col[c], col[f"_nn_{c}"] == 0) for c in stat_cols})
+        return _frame_chunks(pdf["conv_id"].iloc[0], tier, epochs, series,
+                             chunk_points)
 
     return rollup.groupBy("conv_id").applyInPandas(enc, CHUNK_SCHEMA)
 
@@ -214,25 +174,16 @@ def decode_chunks(chunks: DataFrame) -> DataFrame:
 
     def dec(batches):
         for pdf in batches:
-            frames = []
-            for _, r in pdf.iterrows():
-                n = int(r["n_points"])
-                ts = decode_timestamps(bytes(r["ts_codec"]))
-                vals = _decode_values(bytes(r["val_codec"]), n)
-                d = {"conv_id": r["conv_id"],
-                     "window_start": ts.astype("datetime64[s]").astype("datetime64[us]")}
-                for m in MEASURES:
-                    v, null = vals[m]
-                    # int streams carry 0 at null slots; float streams carry
-                    # NaN — zero them before the int cast either way.
-                    arr = pd.array(np.where(null, 0, v).astype(np.int64), dtype="Int64")
-                    arr[null] = None
-                    d[m] = arr
-                gv, _ = vals["gap_filled"]
-                d["gap_filled"] = gv > 0
-                frames.append(pd.DataFrame(d))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            if len(pdf) == 0:
+                continue
+            n = pdf["n_points"].to_numpy()
+            epochs, series = _decode_chunk_columns(n, pdf["ts_codec"], pdf["val_codec"])
+            out = {"conv_id": np.repeat(pdf["conv_id"].to_numpy(), n),
+                   "window_start": epochs.astype("datetime64[s]").astype("datetime64[us]")}
+            for m in MEASURES:
+                out[m] = pd.arrays.IntegerArray(*series[m])
+            out["gap_filled"] = series["gap_filled"][0] > 0
+            yield pd.DataFrame(out)
 
     return chunks.mapInPandas(dec, ROLLUP_SCHEMA)
 
@@ -255,46 +206,11 @@ def compact_chunks(chunks: DataFrame, chunk_points: int = 4096) -> DataFrame:
     evicted window, rollup.py TTL contract)."""
 
     def compact(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in CHUNK_SCHEMA.fields])
         pdf = pdf.sort_values("chunk_start", kind="mergesort")
-        epochs_parts, val_parts, null_parts, gap_parts = [], [], [], []
-        for _, r in pdf.iterrows():
-            n = int(r["n_points"])
-            epochs_parts.append(decode_timestamps(bytes(r["ts_codec"])))
-            vals = _decode_values(bytes(r["val_codec"]), n)
-            val_parts.append(vals)
-        epochs = np.concatenate(epochs_parts)
-        conv_id = pdf["conv_id"].iloc[0]
-        tier = pdf["tier"].iloc[0]
-        merged = {
-            m: (np.concatenate([vp[m][0] for vp in val_parts]),
-                np.concatenate([vp[m][1] for vp in val_parts]))
-            for m in _SERIES
-        }
-
-        rows = []
-        for lo in range(0, len(epochs), chunk_points):
-            hi = min(lo + chunk_points, len(epochs))
-            parts = []
-            for m in _SERIES:
-                v, nm = merged[m]
-                body = np.where(nm, 0, v).astype(np.int64)[lo:hi]
-                if m == "gap_filled" or m.endswith("_count"):
-                    stream = encode_ints(body, None)
-                else:
-                    stream = encode_ints(body, nm[lo:hi])
-                parts.append(struct.pack(">I", len(stream)))
-                parts.append(stream)
-            rows.append({
-                "conv_id": conv_id,
-                "tier": tier,
-                "chunk_start": pd.Timestamp(int(epochs[lo]), unit="s"),
-                "n_points": hi - lo,
-                "ts_codec": encode_timestamps(epochs[lo:hi]),
-                "val_codec": b"".join(parts),
-            })
-        return pd.DataFrame(rows)
+        epochs, series = _decode_chunk_columns(
+            pdf["n_points"], pdf["ts_codec"], pdf["val_codec"])
+        return _frame_chunks(pdf["conv_id"].iloc[0], pdf["tier"].iloc[0],
+                             epochs, series, chunk_points)
 
     return chunks.groupBy("conv_id", "tier").applyInPandas(
         compact, CHUNK_SCHEMA)

@@ -133,7 +133,7 @@ def run_pipeline(
             if cfg.compress:
                 # Format bump -> fingerprint mismatch -> bucket re-encodes on
                 # resume instead of leaving mixed-version chunk tables behind
-                # (legacy streams still decode; this keeps tables homogeneous).
+                # (a chunk in another format fails to decode, so tables must not mix).
                 from yatsm_spark.operators.codec import CHUNK_FORMAT_VERSION
                 fp = f"{fp}:cfv{CHUNK_FORMAT_VERSION}"
             if resume and ckpt.is_done("bucket", b, fp):
